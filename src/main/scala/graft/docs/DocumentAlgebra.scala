@@ -48,22 +48,11 @@ object DocumentAlgebra {
         lit("dq_score_timeliness"), lit(0.0),
         lit("dq_score_uniqueness"), lit(0.0)).as("dqScores"))
 
-  /** J4: all documents having `guid` among their breadcrumb ancestors —
-    * the descendant set (`get_child_entity_docs`
-    * synchronize_app_search.py:101-115), as a semi-join over all parents. */
-  def descendantsOf(docs: DataFrame, parents: DataFrame): DataFrame =
-    docs.as("d").join(parents.as("p"),
-      array_contains(col("d.breadcrumbGuid"), col("p.guid")))
-
   /** G8: (re)derive breadcrumbs from a parent edge: child path =
     * parent path ++ [parent] (`define_breadcrumb`
-    * synchronize_app_search.py:467-482). One self-join on the docs table. */
-  def deriveBreadcrumbs(docs: DataFrame, edges: DataFrame): DataFrame =
-    deriveBreadcrumbsSplit(docs, docs, edges)
-
-  /** G8 with separate child/parent frames: lets the cascade loop join a
-    * small frontier against an equally small finalized-parents set instead
-    * of scanning the whole store per level. */
+    * synchronize_app_search.py:467-482). Separate child/parent frames let
+    * the cascade loop join a small frontier against an equally small
+    * finalized-parents set instead of scanning the whole store per level. */
   def deriveBreadcrumbsSplit(children: DataFrame, parents: DataFrame,
       edges: DataFrame): DataFrame = {
     val docs = children
@@ -94,14 +83,6 @@ object DocumentAlgebra {
   def deleteBreadcrumbPrefix(bc: Column, g: Column): Column =
     when(array_position(bc, g) > 0,
       slice(bc, array_position(bc, g).cast("int"), size(bc))).otherwise(bc)
-
-  /** G10 companion for the parallel name/type arrays: slice at the index
-    * where the GUID array matched (positional, not name-match — SURVEY G17
-    * correctness note). */
-  def deleteBreadcrumbPrefixAt(arr: Column, bcGuid: Column, g: Column): Column =
-    when(array_position(bcGuid, g) > 0,
-      slice(arr, array_position(bcGuid, g).cast("int"), size(arr)))
-      .otherwise(arr)
 
   /** G11: breadcrumb reset + parent clear for children of a removed edge
     * (`delete_breadcrumb` :325-331, `delete_parent_guid` :319-322). */
@@ -429,24 +410,6 @@ object DocumentAlgebra {
         inheritDerived(col("derivedGuids"), col("pGuids")))
         .otherwise(col("derivedGuids")))
       .drop("pNames", "pGuids")
-  }
-
-  /** G16 inverse: clear governance-role derived guids on relationship
-    * delete. `roles` columns: (guid, role). */
-  def removeGovernanceRoles(docs: DataFrame, roles: DataFrame): DataFrame = {
-    val keyMap = map(governanceRoleKeys.toSeq
-      .flatMap { case (r, k) => Seq(lit(r), lit(k)) }: _*)
-    val u = roles
-      .select(col("guid"), element_at(keyMap, col("role")).as("guidKey"))
-      .filter(col("guidKey").isNotNull)
-      .groupBy("guid")
-      .agg(collect_set(col("guidKey")).as("dropKeys"))
-    docs.join(u, Seq("guid"), "left_outer")
-      .withColumn("derivedGuids", when(col("dropKeys").isNotNull,
-        map_filter(col("derivedGuids"),
-          (k, _) => !array_contains(col("dropKeys"), k)))
-        .otherwise(col("derivedGuids")))
-      .drop("dropKeys")
   }
 
   /** G21: whitelisted attribute upsert into documents

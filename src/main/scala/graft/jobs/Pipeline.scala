@@ -56,13 +56,6 @@ object Pipeline {
         .as("relationshipAttributes"),
       col("atlasEntity.relationshipAttributes").isNotNull.as("directChange"))
 
-  /** Job 3: change messages from the version stream (EntityDiff), shaped to
-    * the SynchronizeSearch message contract. Parent-edge columns derive from
-    * inserted/deleted parent-type relationships (G5/G6 orientation via the
-    * key prefix convention). */
-  def toMessages(versions: DataFrame): DataFrame =
-    shapeMessages(EntityDiff.determineChange(versions))
-
   /** G5/G6: oriented parent-child edges from inserted (or deleted)
     * relationships. Classification follows the reference's
     * `is_parent_child_relationship` (`synchronize_app_search.py:117-130`):

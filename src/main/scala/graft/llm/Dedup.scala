@@ -75,15 +75,6 @@ object Dedup {
       .orderBy("source")
   }
 
-  /** k-word shingles from an already-materialized tokens ATTRIBUTE
-    * (distinct, as array). Do not pass a computed expression — stage it. */
-  def shinglesFromTokens(toks: Column, k: Int = 3): Column =
-    array_distinct(filter(
-      transform(toks, (_, i) =>
-        when(i <= size(toks) - k,
-          concat_ws(" ", (0 until k).map(j => element_at(toks, i + j + 1)): _*))),
-      s => s.isNotNull))
-
   /** Distinct k-word shingles as ROWS (doc_id, s): posexplode the token
     * stream, then window `lead` stitches each shingle — whole-stage codegen
     * end to end (the lambda formulation interprets ~23 µs per element).
@@ -107,22 +98,6 @@ object Dedup {
       // rare shingle would inflate n_sh, shrink the prefix below the
       // ⌈t·|set|⌉ bound, and silently drop qualifying pairs.
       .distinct()
-  }
-
-  /** Staged (doc_id, sh) array table for pairwise scoring. */
-  def shingleTable(docs: DataFrame, k: Int = 3): DataFrame =
-    shingleRows(docs, k)
-      .groupBy("doc_id")
-      .agg(array_sort(collect_set(col("s"))).as("sh"))
-
-  /** Back-compat convenience for tests: shingles of a raw text column. */
-  def shingles(text: Column, k: Int = 3): Column = {
-    val toks = split(trim(text), "\\s+")
-    array_distinct(filter(
-      transform(toks, (_, i) =>
-        when(i <= size(toks) - k,
-          concat_ws(" ", (0 until k).map(j => element_at(toks, i + j + 1)): _*))),
-      s => s.isNotNull))
   }
 
   /** Pairwise n-gram Jaccard within cheap blocks (lang, source): the
@@ -260,14 +235,6 @@ object Dedup {
         (0 until n).map(j => sigHash(col("s"), j).as(s"h$j")): _*)
       .groupBy("doc_id")
       .agg(array((0 until n).map(j => min(col(s"h$j"))): _*).as("sig"))
-  }
-
-  /** Back-compat: signature from raw text (tests only — stages internally
-    * when used via signatureTable). */
-  def minhashSignature(text: Column, n: Int = 8): Column = {
-    require(n <= 8, s"n=$n exceeds the ${SigSalts.size * 2} derived hashes")
-    array((0 until n).map(j =>
-      array_min(transform(shingles(text), s => sigHash(s, j)))): _*)
   }
 
   /** Exploded LSH band buckets of a signature table: one (doc_id, sig,
@@ -556,20 +523,4 @@ object Dedup {
               .otherwise(0L)
           }).as("simhash"))
       .orderBy("doc_id")
-
-  /** Back-compat column form (tests). */
-  def simhashCol(text: Column): Column = {
-    val toks = array_distinct(split(trim(text), "\\s+"))
-    val th = transform(toks, w => conv(substring(md5(w), 1, 4), 16, 10).cast("long"))
-    aggregate(
-      sequence(lit(0), lit(15)),
-      lit(0L),
-      (acc, bit) => {
-        val votes = aggregate(th, lit(0), (v, h) =>
-          v + when(call_function("shiftright", h, bit).bitwiseAND(1) === 1, 1)
-            .otherwise(-1))
-        acc + when(votes > 0, call_function("shiftleft", lit(1L), bit))
-          .otherwise(0L)
-      })
-  }
 }

@@ -1,6 +1,6 @@
 package graft.registry
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import scala.annotation.tailrec
 
@@ -132,17 +132,5 @@ object TypeRegistry {
   def parentTypeCol(typeName: Column): Column = {
     val entries = hierarchyMapping.toSeq.flatMap { case (c, p) => Seq(lit(c), lit(p)) }
     element_at(map(entries: _*), typeName)
-  }
-
-  /** The registry as a small dimension table (joinable / broadcastable). */
-  def asTable(spark: SparkSession) = {
-    import spark.implicits._
-    superTypeClosure.toSeq
-      .map { case (t, sups) =>
-        (t, sups, sourceTypeOf(t), m4iSourceTypesOf(t),
-          hierarchyMapping.get(t).orNull)
-      }
-      .toDF("typeName", "superTypes", "sourceType", "m4iSourceTypes",
-        "parentType")
   }
 }

@@ -39,13 +39,8 @@ object ArtifactCache {
   locally { // one hook for every artifact this process ever publishes
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       allDirs.forEach { p =>
-        try {
-          scala.util.Using.resource(
-            java.nio.file.Files.walk(java.nio.file.Paths.get(p))) { st =>
-            st.sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-          }
-        } catch { case _: Throwable => () }
+        try ModelStore.deleteRecursively(java.nio.file.Paths.get(p))
+        catch { case _: Throwable => () }
       }))
   }
 

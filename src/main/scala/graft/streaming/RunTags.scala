@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.store.ModelStore
+import graft.store.{ModelStore, Pointer}
 
 /** COMPOSITE "training run" tags (VERDICT r14 #3): "what run N saw" is
   * a corpus snapshot AND an index snapshot, but the two tag stores are
@@ -53,7 +53,6 @@ object RunTags {
       releaseTagPath: String, corpusBatch: Long,
       indexTagPath: String, indexBatch: Long,
       indexVersion: Long): Unit = {
-    StreamingRelease.validTag(name) // fence before any write
     val nonce = Some(runNonce(corpusBatch, indexBatch, indexVersion))
     StreamingAnn.tagIndexSnapshot(spark, indexTagPath, name,
       indexBatch, indexVersion, nonce)
@@ -70,7 +69,7 @@ object RunTags {
   def resolveRun(spark: SparkSession, name: String,
       releaseTagPath: String, indexTagPath: String)
       : (Long, Long, Long) = {
-    val n = StreamingRelease.validTag(name)
+    val n = Pointer.validTag(name)
     def half[T](read: => T): Option[T] =
       try Some(read)
       catch { case _: IllegalArgumentException => None }

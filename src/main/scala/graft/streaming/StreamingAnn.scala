@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.llm.Similarity
-import graft.store.ModelStore
+import graft.store.{ModelStore, Pointer}
 
 /** Incremental ANN index maintenance on ingest (VERDICT r6 #2) — the
   * vector-side analogue of [[StreamingDedup]]'s signature store: the
@@ -1369,82 +1369,19 @@ object StreamingAnn {
   // both dials are needed, because an as-of below a later version's
   // watermark correctly refuses (the fold physically absorbed later
   // batches). Tag at ingest time with the current version; the reads
-  // it resolves to ARE the watermark-guarded as-of serves. Same store
-  // discipline as the release tags: tiny parquet, tag=NAME partition,
-  // re-tag overwrites its own partition, names fenced to a safe
-  // charset ([[StreamingRelease.validTag]]). ----
+  // it resolves to ARE the watermark-guarded as-of serves. A tag is a
+  // [[graft.store.Pointer]] tag file, like the release tags. ----
 
   /** Name the live index's state after `batch` committed: records
-    * (batch, version) under `tagPath/tag=NAME`.
-    *
-    * A tag is a POINTER, and it is stored like one — a one-line file
-    * promoted by an overwriting atomic rename, the `_CURRENT` /
-    * `_folded_upto` discipline. The previous parquet `mode(overwrite)`
-    * of the partition dir was delete-then-write: a crash mid-retag
-    * left NO readable tag, and since [[annMaintainBatch]] resolves
-    * [[taggedIndexVersions]] AT GC TIME, a GC firing inside that
-    * window read an empty tag dir, dropped the tagged version from
-    * the pin set, and could delete the very version the tag protected
-    * (ADVICE r14). The rename leaves either the old pointer or the
-    * new one on every prefix of the crash — never none. (Dir-onto-dir
-    * rename cannot overwrite atomically on HDFS; a one-line file
-    * can.) */
+    * (batch, version) under `tagPath/tag=NAME`. [[annMaintainBatch]]
+    * resolves [[taggedIndexVersions]] at GC time, so the tag must never
+    * read as missing mid-retag, which the pointer's atomic replace
+    * guarantees. `nonce` is the [[graft.streaming.RunTags]] generation
+    * marker; single-store tags carry none. */
   def tagIndexSnapshot(spark: SparkSession, tagPath: String,
       tag: String, batch: Long, version: Long,
-      nonce: Option[String] = None): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(tagPath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dir)
-    val name = StreamingRelease.validTag(tag)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".tag-$name.tmp")
-    val out = fs.create(tmp, true)
-    // the optional `#nonce` suffix is the RunTags generation marker
-    // (StreamingRelease.splitNonce); single-store tags carry none
-    try out.write(
-      (s"$batch $version" +
-        nonce.map(n => s"#${StreamingRelease.validNonce(n)}").getOrElse(""))
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // one-time upgrade: a pre-r15 tag is a parquet DIR, and a file
-    // cannot rename over a non-empty dir — remove it first. This one
-    // retag is delete-then-rename (the old hazard); every later retag
-    // of the name is the atomic pointer swap.
-    val dest = new org.apache.hadoop.fs.Path(dir, s"tag=$name")
-    if (fs.exists(dest) && fs.getFileStatus(dest).isDirectory)
-      fs.delete(dest, true)
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(dir.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, new org.apache.hadoop.fs.Path(dir, s"tag=$name"),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  /** Read one tag pointer: `Some((batch, version))`, or None when the
-    * tag does not exist. Pre-r15 stores wrote each tag as a 1-row
-    * parquet PARTITION dir — still readable (upgrade compatibility);
-    * the next re-tag of that name rewrites it as a pointer file. */
-  private def readIndexTag(spark: SparkSession, tagPath: String,
-      name: String): Option[(Long, Long)] =
-    readIndexTagWithNonce(spark, tagPath, name).map(t => (t._1, t._2))
-
-  private def readIndexTagWithNonce(spark: SparkSession, tagPath: String,
-      name: String): Option[(Long, Long, Option[String])] = {
-    val p = new org.apache.hadoop.fs.Path(s"$tagPath/tag=$name")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else if (fs.getFileStatus(p).isDirectory) {
-      val r = spark.read.parquet(p.toString)
-        .select("batch", "version").head()
-      Some((r.getLong(0), r.getLong(1), None))
-    } else {
-      val in = fs.open(p)
-      val s = try new String(in.readAllBytes,
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-      val (payload, nonce) = StreamingRelease.splitNonce(s)
-      val Array(b, v) = payload.split("\\s+")
-      Some((b.toLong, v.toLong, nonce))
-    }
-  }
+      nonce: Option[String] = None): Unit =
+    Pointer.writeTag(spark, tagPath, tag, Seq(batch, version), nonce)
 
   /** Resolve an index tag to its (as-of batch, version) pair; unknown
     * tags fail loudly. */
@@ -1454,34 +1391,24 @@ object StreamingAnn {
     (b, v)
   }
 
-  /** [[resolveIndexTag]] plus the generation nonce (None for pre-nonce
-    * payloads, parquet-dir tags, and single-store tags) — the
+  /** [[resolveIndexTag]] plus the generation nonce (None for pre-nonce,
+    * directory and single-store tags) — the
     * [[graft.streaming.RunTags.resolveRun]] torn-re-tag check. */
   def resolveIndexTagWithNonce(spark: SparkSession, tagPath: String,
       tag: String): (Long, Long, Option[String]) =
-    readIndexTagWithNonce(spark, tagPath, StreamingRelease.validTag(tag))
-      .getOrElse(throw new IllegalArgumentException(
-        s"unknown index snapshot tag '$tag' under $tagPath"))
+    Pointer.readTag(spark, tagPath, tag, Seq("batch", "version")) match {
+      case Some((Seq(b, v), nonce)) => (b, v, nonce)
+      case _ => throw new IllegalArgumentException(
+        s"unknown index snapshot tag '$tag' under $tagPath")
+    }
 
   /** Every version named by any tag under `tagPath` — the pin set a
     * retention caller hands [[gcIndexVersions]] so tagged snapshots
-    * stay servable forever. One driver listing + one tiny read per
-    * tag (≤ |tags|); a concurrent re-tag is invisible (each pointer
-    * read sees its old or new value, never a missing one). */
+    * stay servable forever. An absent or empty dir is no tags. */
   def taggedIndexVersions(spark: SparkSession,
-      tagPath: String): Set[Long] = {
-    val p = new org.apache.hadoop.fs.Path(tagPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // existing-but-empty tag dirs (pre-created by tooling, or the last
-    // tag removed) are NO tags, not a crash inside the maintenance
-    // batch (review r14)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).iterator
-      .filter(_.getPath.getName.startsWith("tag="))
-      .flatMap(s => readIndexTag(spark, tagPath,
-        s.getPath.getName.stripPrefix("tag=")))
-      .map(_._2).toSet
-  }
+      tagPath: String): Set[Long] =
+    Pointer.tagNames(spark, tagPath)
+      .map(resolveIndexTag(spark, tagPath, _)._2).toSet
 
   /** [[searchIncremental]] at a NAMED snapshot — resolve the tag once,
     * serve that version's artifacts as-of that batch (bit-identical to

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.store.VersionedStore
 
-@SlowTest
 class StoreSpec extends AnyFunSuite {
   import SparkTestSession._
 
