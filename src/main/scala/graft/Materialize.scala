@@ -28,36 +28,43 @@ object Materialize {
   /** Eager local checkpoint whose LogicalRDD carries no origin constraints.
     * The conf flip is serialized (the flag is session-global): without the
     * lock, two concurrent checkpoints could interleave read/restore and
-    * leave constraint propagation disabled for the whole session. Only the
-    * LAZY checkpoint (plan + LogicalRDD creation, where constraints are
-    * captured) runs under the lock; the materialization job runs outside,
-    * so concurrent checkpoints don't serialize their Spark jobs.
+    * leave constraint propagation disabled for the whole session.
+    *
+    * What runs under the lock: `localCheckpoint(false)` executes the
+    * physical plan to get its RDD, and under AQE that materializes every
+    * query stage of the plan — each shuffle-map and broadcast job runs
+    * INSIDE `synchronized`, with constraint propagation off. Only the
+    * final result stage (the checkpointed RDD's own partitions) runs
+    * later, in the count job of [[checkpointCounted]] or in the first
+    * consumer of [[checkpointLazy]]. So concurrent checkpoints DO
+    * serialize most of their Spark jobs.
     *
     * KNOWN LIMITATION: the flag is session-global, so any OTHER thread
-    * planning unrelated queries on the same session during the (short,
-    * planning-only) window plans with constraint propagation disabled —
-    * potentially losing inferred filters for that one plan. This is a
-    * performance effect only, never correctness. The pipeline drives
-    * checkpoints from the single foreachBatch thread, so the window is
-    * not concurrent in practice; callers sharing a session across threads
-    * should route all checkpoints through this object (the lock) and
-    * accept the rare planning-window de-optimization. The bounded
-    * save/train pools (ModelStore.saveEc, Similarity.trainEc, the
-    * release-ingest overlap) widen that window: a pooled writer may plan
-    * its parquet write while this flag is flipped. Still perf-only — a
-    * constraint-propagation miss can only forgo a filter inference, never
-    * change results — so the pools deliberately accept it. */
+    * planning queries on the same session while a checkpoint holds the
+    * lock — a window as long as the checkpointed plan's shuffle and
+    * broadcast jobs, not just its planning — plans with constraint
+    * propagation disabled and may lose inferred filters for that plan.
+    * This is a performance effect only, never correctness: a
+    * constraint-propagation miss can only forgo a filter inference. The
+    * pipeline drives checkpoints from the single foreachBatch thread; the
+    * bounded save/train pools (ModelStore.saveEc, Similarity.trainEc, the
+    * release-ingest overlap) may plan while the flag is flipped and
+    * deliberately accept it. ROADMAP item 4 removes the flag and the lock
+    * (rebuild the checkpointed LogicalRDD without origin constraints). */
   def checkpoint(df: DataFrame): DataFrame = checkpointCounted(df)._1
 
   /** Like [[checkpoint]] but also returns the materialized row count —
     * callers that would otherwise follow the checkpoint with an `isEmpty`
     * or `count()` probe get it for free (the eager materialization IS a
-    * count), saving one Spark job per probe. The e2e dispatcher runs ~15
-    * checkpoints per batch, so these probe jobs were a real constant cost
-    * (VERDICT r3 perf note). */
+    * count), saving one Spark job per probe.
+    *
+    * The count runs on the checkpointed RDD itself, not as
+    * `Dataset.count()`: that is an aggregate plan, which under AQE costs a
+    * planning pass, a shuffle-map job and a result job. Counting the RDD
+    * is one job that computes (and so checkpoints) every partition. */
   def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
     val out = checkpointLazy(df)
-    val n = out.count() // materializes the checkpoint eagerly
+    val n = out.queryExecution.toRdd.count()
     tally.foreach(_.addAndGet(n))
     (out, n)
   }

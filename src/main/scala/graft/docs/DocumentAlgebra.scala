@@ -114,15 +114,27 @@ object DocumentAlgebra {
     * the 100 TB-safe shape). */
   val broadcastRenameLimit: Int = 10000
 
-  private def renameCountExceeds(renames: DataFrame, limit: Int): Boolean =
-    renames.limit(limit + 1).count() > limit
+  /** Whether a rename set takes the bulk (join-based) path: more than
+    * `limit` renames. `bound` is a known upper bound on that count (the
+    * dispatcher passes its batch's rename-message count); the exact count
+    * job runs only when the bound exceeds the limit. */
+  def bulkRenames(renames: DataFrame, bound: Long = Long.MaxValue,
+      limit: Int = broadcastRenameLimit): Boolean =
+    bound > limit && renames.limit(limit + 1).count() > limit
 
   /** G17: positional rename inside breadcrumb name arrays — replace the name
     * at every index whose guid matches (`update_name_in_breadcrumbs`
     * :598-636, minus its set-literal crash bug). `renames` must have columns
     * (guid, newName). Applies ALL renames to ALL descendants in one join. */
   def renameInBreadcrumbs(docs: DataFrame, renames: DataFrame,
-      broadcastLimit: Int = broadcastRenameLimit): DataFrame = {
+      broadcastLimit: Int = broadcastRenameLimit): DataFrame =
+    renameInBreadcrumbs(docs, renames,
+      bulkRenames(renames, limit = broadcastLimit))
+
+  /** [[renameInBreadcrumbs]] with the broadcast-or-bulk choice already
+    * made (see [[bulkRenames]]). */
+  def renameInBreadcrumbs(docs: DataFrame, renames: DataFrame,
+      bulk: Boolean): DataFrame = {
     // affected docs via an equi semi-join on the exploded breadcrumb
     // ancestors — an array_contains join condition would plan as a
     // nested-loop (|docs| × |renames| evals: 100M+ when a bulk batch
@@ -131,7 +143,7 @@ object DocumentAlgebra {
       .join(renames.select(col("guid").as("bg")), Seq("bg"), "left_semi")
       .select("guid").distinct()
     val joined = docs.join(hit, Seq("guid"), "left_semi")
-    if (renameCountExceeds(renames, broadcastLimit)) {
+    if (bulk) {
       // bulk backfill: positional explode + equi-join + reassemble
       val exploded = joined
         .select(col("guid").as("d_guid"),
@@ -166,8 +178,15 @@ object DocumentAlgebra {
     * the reference's 104-line per-type dispatch (:639-742) becomes one
     * map_zip_with over the (names, guids) maps. */
   def renameInDerived(docs: DataFrame, renames: DataFrame,
-      broadcastLimit: Int = broadcastRenameLimit): DataFrame = {
-    if (renameCountExceeds(renames, broadcastLimit)) {
+      broadcastLimit: Int = broadcastRenameLimit): DataFrame =
+    renameInDerived(docs, renames,
+      bulkRenames(renames, limit = broadcastLimit))
+
+  /** [[renameInDerived]] with the broadcast-or-bulk choice already made
+    * (see [[bulkRenames]]). */
+  def renameInDerived(docs: DataFrame, renames: DataFrame,
+      bulk: Boolean): DataFrame = {
+    if (bulk) {
       // bulk backfill: explode derived-guid entries, equi-join the rename
       // set, fold per-doc rename maps back in
       val upd = docs

@@ -320,21 +320,36 @@ object Pipeline {
     // earlier link (reference serial order, VERDICT r3 #4)
     val droppedLinks = toAttributeFieldLinks(direct, "deletedRelationships")
     val droppedRoles = toGovernanceRoles(direct, "deletedRelationships")
-    val docs2 = graft.docs.DocumentAlgebra.resolveGovernanceRoles(
-      graft.docs.DocumentAlgebra.resolveAttributeFieldLinks(docs1,
-        links, droppedLinks),
-      roles, droppedRoles)
-    // G12: derived updates cascade to descendants of link/role endpoints;
-    // the counted checkpoint doubles as the emptiness probe (one job)
+    // every link/role endpoint of the batch, tagged insert or delete: ONE
+    // counted checkpoint (one job for the count, after the feeds' own
+    // shuffle jobs) is both the emptiness probe of all four feeds and the
+    // G12 propagation seed (its insert rows)
+    def endpoints(l: DataFrame, r: DataFrame, insert: Boolean): DataFrame =
+      l.select(col("attrGuid").as("guid"))
+        .unionByName(l.select(col("fieldGuid").as("guid")))
+        .unionByName(r.select(col("guid")))
+        .withColumn("insert", lit(insert))
     val (touched, touchedCount) = graft.Materialize.checkpointCounted(
-      links.select(col("attrGuid").as("guid"))
-        .unionByName(links.select(col("fieldGuid").as("guid")))
-        .unionByName(roles.select(col("guid")))
+      endpoints(links, roles, insert = true)
+        .unionByName(endpoints(droppedLinks, droppedRoles, insert = false))
         .distinct())
-    if (touchedCount == 0) docs2
-    else graft.docs.DocumentAlgebra.propagateDerivedToDescendants(docs2,
-      docs2.join(touched, Seq("guid"), "left_semi")
-        .select(col("guid"), col("derivedNames"), col("derivedGuids")))
+    // no link or role event: G15/G16/G12 are identities, so skip their
+    // plans — but keep the column order their guid joins produce (guid
+    // first): DocumentStore hashes columns in schema order
+    if (touchedCount == 0)
+      docs1.select(col("guid") +:
+        docs1.columns.filterNot(_ == "guid").toSeq.map(col): _*)
+    else {
+      val docs2 = graft.docs.DocumentAlgebra.resolveGovernanceRoles(
+        graft.docs.DocumentAlgebra.resolveAttributeFieldLinks(docs1,
+          links, droppedLinks),
+        roles, droppedRoles)
+      // G12: derived updates cascade to descendants of inserted link/role
+      // endpoints (a delete-only batch propagates nothing)
+      graft.docs.DocumentAlgebra.propagateDerivedToDescendants(docs2,
+        docs2.join(touched.filter(col("insert")), Seq("guid"), "left_semi")
+          .select(col("guid"), col("derivedNames"), col("derivedGuids")))
+    }
   }
 
   /** Jobs 1-3 (parse → contract DLQ → versions → diff → messages) without

@@ -7,7 +7,6 @@ import graft.jobs.{Pipeline, SynchronizeSearch}
 /** End-to-end 4-job pipeline test: raw audit JSON → parse/DLQ → versions →
   * change messages → document store (SURVEY §5.2.3; fixture shapes from
   * FIXTURES §1–§5). */
-@SlowTest
 class PipelineSpec extends AnyFunSuite {
   import SparkTestSession._
   import RowSeqOps._

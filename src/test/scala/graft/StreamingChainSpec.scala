@@ -10,7 +10,6 @@ import graft.streaming.StreamingJobs
   * change messages → document store via foreachBatch (SURVEY §0 diagram,
   * streaming form). This is the pipeline a user of the reference would run
   * instead of its four Flink processes. */
-@SlowTest
 class StreamingChainSpec extends AnyFunSuite {
   import SparkTestSession._
   import RowSeqOps._
