@@ -15,7 +15,8 @@ import graft.registry.TypeRegistry
   *   - descendant selection (J4) = `array_contains(breadcrumbGuid, …)` join
   *   - breadcrumbs carry the full ancestor path, so a root rename reaches
   *     grandchildren in a single pass (no per-level iteration; SURVEY §7.5.2)
-  *   - last-wins merge (A8) = max_by on a sequence column
+  *   - last-wins merge (A8) = max_by on a sequence column (the folds in
+  *     `SynchronizeSearch.applyChanges`)
   *
   * Docs schema = graft.model.AtlasModel.SearchDocument.
   */
@@ -72,18 +73,6 @@ object DocumentAlgebra {
         replaced.getOrElse(c, col(s"c.$c")).as(c)): _*)
   }
 
-  /** G9: idempotently prepend a new ancestor to descendant breadcrumbs
-    * (`insert_prefix_to_breadcrumbs_of_child_entities` :231-244 — with its
-    * breadcrumbguids-vs-breadcrumbguid write/read typo corrected). */
-  def insertBreadcrumbPrefix(bc: Column, g: Column): Column =
-    when(!array_contains(bc, g), concat(array(g), bc)).otherwise(bc)
-
-  /** G10: drop ancestors strictly above `g` — slice from g's position
-    * (`delete_prefix_from_breadcrumbs_of_child_entities` :247-260). */
-  def deleteBreadcrumbPrefix(bc: Column, g: Column): Column =
-    when(array_position(bc, g) > 0,
-      slice(bc, array_position(bc, g).cast("int"), size(bc))).otherwise(bc)
-
   /** G11: breadcrumb reset + parent clear for children of a removed edge
     * (`delete_breadcrumb` :325-331, `delete_parent_guid` :319-322). */
   def resetBreadcrumb(docs: DataFrame): DataFrame =
@@ -101,12 +90,6 @@ object DocumentAlgebra {
       map_filter(childNames, (k, _) => !map_contains_key(parentNames, k)),
       parentNames)
 
-  /** G14: clear child derived entries equal to the parent's
-    * (`delete_derived_entities` :273-281). */
-  def clearDerived(childM: Column, parentM: Column): Column =
-    map_filter(childM,
-      (k, v) => !(map_contains_key(parentM, k) && element_at(parentM, k) <=> v))
-
   /** Per-microbatch rename sets are tiny (a handful of UI edits), so the
     * default path collapses them into one broadcast map. A bulk-rename
     * BACKFILL would blow that single row up, so above this many renames
@@ -115,24 +98,18 @@ object DocumentAlgebra {
   val broadcastRenameLimit: Int = 10000
 
   /** Whether a rename set takes the bulk (join-based) path: more than
-    * `limit` renames. `bound` is a known upper bound on that count (the
-    * dispatcher passes its batch's rename-message count); the exact count
-    * job runs only when the bound exceeds the limit. */
-  def bulkRenames(renames: DataFrame, bound: Long = Long.MaxValue,
-      limit: Int = broadcastRenameLimit): Boolean =
-    bound > limit && renames.limit(limit + 1).count() > limit
+    * [[broadcastRenameLimit]] renames. `bound` is a known upper bound on
+    * that count (the dispatcher passes its batch's rename-message count);
+    * the exact count job runs only when the bound exceeds the limit. */
+  def bulkRenames(renames: DataFrame, bound: Long): Boolean =
+    bound > broadcastRenameLimit &&
+      renames.limit(broadcastRenameLimit + 1).count() > broadcastRenameLimit
 
   /** G17: positional rename inside breadcrumb name arrays — replace the name
     * at every index whose guid matches (`update_name_in_breadcrumbs`
     * :598-636, minus its set-literal crash bug). `renames` must have columns
-    * (guid, newName). Applies ALL renames to ALL descendants in one join. */
-  def renameInBreadcrumbs(docs: DataFrame, renames: DataFrame,
-      broadcastLimit: Int = broadcastRenameLimit): DataFrame =
-    renameInBreadcrumbs(docs, renames,
-      bulkRenames(renames, limit = broadcastLimit))
-
-  /** [[renameInBreadcrumbs]] with the broadcast-or-bulk choice already
-    * made (see [[bulkRenames]]). */
+    * (guid, newName). Applies ALL renames to ALL descendants in one join;
+    * `bulk` picks the join-based path (see [[bulkRenames]]). */
   def renameInBreadcrumbs(docs: DataFrame, renames: DataFrame,
       bulk: Boolean): DataFrame = {
     // affected docs via an equi semi-join on the exploded breadcrumb
@@ -176,14 +153,8 @@ object DocumentAlgebra {
   /** G18: rename inside derived-field maps: for every doc whose derivedGuids
     * references a renamed guid, rewrite the matching derivedNames entry —
     * the reference's 104-line per-type dispatch (:639-742) becomes one
-    * map_zip_with over the (names, guids) maps. */
-  def renameInDerived(docs: DataFrame, renames: DataFrame,
-      broadcastLimit: Int = broadcastRenameLimit): DataFrame =
-    renameInDerived(docs, renames,
-      bulkRenames(renames, limit = broadcastLimit))
-
-  /** [[renameInDerived]] with the broadcast-or-bulk choice already made
-    * (see [[bulkRenames]]). */
+    * transform_values over the (names, guids) maps. `bulk` picks the
+    * join-based path (see [[bulkRenames]]). */
   def renameInDerived(docs: DataFrame, renames: DataFrame,
       bulk: Boolean): DataFrame = {
     if (bulk) {
@@ -218,74 +189,25 @@ object DocumentAlgebra {
     }
   }
 
-  /** G15: attribute↔field derived cross-links
+  /** G15/G14: attribute↔field derived cross-links
     * (`define_derived_entity_attribute_field_fields`
-    * synchronize_app_search.py:154-174; delete variant :177-197).
-    * `links` columns: (attrGuid, fieldGuid). Sets derivedfield(guid) on the
-    * attribute doc and deriveddataattribute(guid) on the field doc — both
-    * sides updated in ONE pass via a union of projected updates merged into
-    * the store (the reference does two point reads + writes per link). */
-  def applyAttributeFieldLinks(docs: DataFrame, links: DataFrame,
-      delete: Boolean = false): DataFrame = {
-    val names = docs.select(col("guid").as("other_guid"),
-      col("name").as("other_name"))
-    // links without a seq column (direct callers, older feeds) resolve as
-    // one same-time batch
-    val l = if (links.columns.contains("seq")) links
-      else links.withColumn("seq", lit(0L))
-    // per-doc update maps (key → value) aggregated from both link ends —
-    // one row per guid, so the docs join never fans out
-    val updates =
-      l.select(col("attrGuid").as("guid"),
-          lit("derivedfield").as("nameKey"),
-          lit("derivedfieldguid").as("guidKey"),
-          col("fieldGuid").as("other_guid"), col("seq"))
-        .unionByName(l.select(col("fieldGuid").as("guid"),
-          lit("deriveddataattribute").as("nameKey"),
-          lit("deriveddataattributeguid").as("guidKey"),
-          col("attrGuid").as("other_guid"), col("seq")))
-        .join(names, Seq("other_guid"), "left_outer")
-        // last-wins per (guid, key) IN EVENT ORDER: an entity linked to
-        // TWO fields in one batch must end at the later link, exactly as
-        // the reference's serial application does
-        // (synchronize_app_search.py:154-174); other_guid breaks exact
-        // seq ties deterministically for replay
-        .groupBy("guid", "nameKey", "guidKey")
-        .agg(max_by(struct(col("other_guid"), col("other_name")),
-          struct(col("seq"), col("other_guid"))).as("w"))
-        .groupBy("guid")
-        .agg(
-          map_from_entries(collect_list(struct(col("nameKey"),
-            coalesce(col("w.other_name"), lit(""))))).as("nameUpd"),
-          map_from_entries(collect_list(struct(col("guidKey"),
-            col("w.other_guid")))).as("guidUpd"))
-    def merged(cur: Column, upd: Column): Column =
-      when(upd.isNull, cur).otherwise(
-        if (delete)
-          map_filter(cur, (k, _) => !map_contains_key(upd, k))
-        else
-          map_concat(map_filter(cur, (k, _) => !map_contains_key(upd, k)), upd))
-    docs.join(updates, Seq("guid"), "left_outer")
-      .withColumn("derivedNames", merged(col("derivedNames"), col("nameUpd")))
-      .withColumn("derivedGuids", merged(col("derivedGuids"), col("guidUpd")))
-      .drop("nameUpd", "guidUpd")
-  }
-
-  /** G15 with the insert AND delete streams merged: every derived key on
-    * every doc resolves to its LAST event in batch order (`seq`), with an
-    * insert beating a delete on an exact tie — the net effect of the
-    * reference applying the same events serially
-    * (`synchronize_app_search.py:154-197`). A one-event re-link (delete
-    * A→F1 + insert A→F2) therefore ends at F2, and a later unlink beats
-    * an earlier link. `inserts`/`deletes` columns: (attrGuid, fieldGuid
-    * [, seq]). */
+    * synchronize_app_search.py:154-174; delete variant :177-197). Sets
+    * derivedfield(guid) on the attribute doc and deriveddataattribute(guid)
+    * on the field doc — both sides updated in ONE pass via a union of
+    * projected updates merged into the store (the reference does two point
+    * reads + writes per link). The insert and delete streams are merged:
+    * every derived key on every doc resolves to its LAST event in batch
+    * order (`seq`), with an insert beating a delete on an exact tie (other
+    * guid breaks exact ties deterministically for replay) — the net effect
+    * of the reference applying the same events serially. A one-event
+    * re-link (delete A→F1 + insert A→F2) therefore ends at F2, and a later
+    * unlink beats an earlier link. `inserts`/`deletes` columns: (attrGuid,
+    * fieldGuid, seq). */
   def resolveAttributeFieldLinks(docs: DataFrame, inserts: DataFrame,
       deletes: DataFrame): DataFrame = {
     val names = docs.select(col("guid").as("other_guid"),
       col("name").as("other_name"))
-    def perDoc(l0: DataFrame, del: Boolean): DataFrame = {
-      val l = if (l0.columns.contains("seq")) l0
-        else l0.withColumn("seq", lit(0L))
+    def perDoc(l: DataFrame, del: Boolean): DataFrame =
       l.select(col("attrGuid").as("guid"),
           lit("derivedfield").as("nameKey"),
           lit("derivedfieldguid").as("guidKey"),
@@ -296,7 +218,6 @@ object DocumentAlgebra {
           lit("deriveddataattributeguid").as("guidKey"),
           col("attrGuid").as("other_guid"), col("seq"),
           lit(del).as("_del")))
-    }
     val winners = perDoc(inserts, del = false)
       .unionByName(perDoc(deletes, del = true))
       .groupBy("guid", "nameKey", "guidKey")
@@ -329,21 +250,22 @@ object DocumentAlgebra {
       .drop("nameUpd", "guidUpd", "delNameKeys", "delGuidKeys")
   }
 
-  /** G16 with insert/delete streams merged — same event-order resolution
-    * as [[resolveAttributeFieldLinks]], for governance-role assignments.
-    * A one-event reassignment (delete zP1 + insert aP2) ends at aP2; a
-    * later unassignment beats an earlier assignment. Columns: (guid, role,
-    * personGuid [, seq]). */
+  /** G16/G14: governance-role derived fields
+    * (`update_governance_role_derived_entity_fields`
+    * synchronize_app_search.py:297-316, its list-indexing bug corrected):
+    * sets derived<role>guid on the entity's document, with the same
+    * event-order resolution of inserts and deletes as
+    * [[resolveAttributeFieldLinks]]. A one-event reassignment (delete zP1
+    * + insert aP2) ends at aP2; a later unassignment beats an earlier
+    * assignment. Columns: (guid, role ∈ [[governanceRoleKeys]], personGuid,
+    * seq); other roles are ignored. */
   def resolveGovernanceRoles(docs: DataFrame, inserts: DataFrame,
       deletes: DataFrame): DataFrame = {
     val keyMap = map(governanceRoleKeys.toSeq
       .flatMap { case (r, k) => Seq(lit(r), lit(k)) }: _*)
-    def ev(r0: DataFrame, del: Boolean): DataFrame = {
-      val r = if (r0.columns.contains("seq")) r0
-        else r0.withColumn("seq", lit(0L))
+    def ev(r: DataFrame, del: Boolean): DataFrame =
       r.select(col("guid"), element_at(keyMap, col("role")).as("guidKey"),
         col("personGuid"), col("seq"), lit(del).as("_del"))
-    }
     val winners = ev(inserts, del = false).unionByName(ev(deletes, del = true))
       .filter(col("guidKey").isNotNull)
       .groupBy("guid", "guidKey")
@@ -367,43 +289,11 @@ object DocumentAlgebra {
       .drop("roleGuids", "dropKeys")
   }
 
-  /** G16: governance-role derived fields
-    * (`update_governance_role_derived_entity_fields`
-    * synchronize_app_search.py:297-316, its list-indexing bug corrected).
-    * `roles` columns: (guid, role ∈ {domainLead, businessOwner, dataSteward},
-    * personGuid). Sets derived<role>guid on the entity's document. */
+  /** G16 role → derived guid key. */
   val governanceRoleKeys: Map[String, String] = Map(
     "domainLead" -> "deriveddomainleadguid",
     "businessOwner" -> "deriveddataownerguid",
     "dataSteward" -> "deriveddatastewardguid")
-
-  def applyGovernanceRoles(docs: DataFrame, roles: DataFrame): DataFrame = {
-    val keyMap = map(governanceRoleKeys.toSeq
-      .flatMap { case (r, k) => Seq(lit(r), lit(k)) }: _*)
-    val r0 = if (roles.columns.contains("seq")) roles
-      else roles.withColumn("seq", lit(0L))
-    val u = r0
-      .select(col("guid"), element_at(keyMap, col("role")).as("guidKey"),
-        col("personGuid"), col("seq"))
-      .filter(col("guidKey").isNotNull)
-      // two persons in the same role in one batch: last-wins IN EVENT
-      // ORDER (the reference applies assignments serially,
-      // synchronize_app_search.py:297-316); personGuid breaks exact seq
-      // ties deterministically
-      .groupBy("guid", "guidKey")
-      .agg(max_by(col("personGuid"),
-        struct(col("seq"), col("personGuid"))).as("personGuid"))
-      .groupBy("guid")
-      .agg(map_from_entries(collect_list(
-        struct(col("guidKey"), col("personGuid")))).as("roleGuids"))
-    docs.as("d").join(u, Seq("guid"), "left_outer")
-      .withColumn("derivedGuids", when(col("roleGuids").isNotNull,
-        map_concat(
-          map_filter(col("derivedGuids"),
-            (k, _) => !map_contains_key(col("roleGuids"), k)),
-          col("roleGuids"))).otherwise(col("derivedGuids")))
-      .drop("roleGuids")
-  }
 
   /** G12: propagate updated ancestors' derived fields to ALL descendants in
     * one pass (`update_derived_entity_fields_of_child_entities` :263-270).
@@ -434,8 +324,6 @@ object DocumentAlgebra {
   /** G21: whitelisted attribute upsert into documents
     * (`handle_updated_attributes` :491-525; whitelist `update_attributes`
     * :17 = {definition, email}; plus the name attribute driving G17/G18). */
-  val attributeWhitelist: Seq[String] = Seq("name", "definition", "email")
-
   def applyAttributeUpdates(docs: DataFrame, updates: DataFrame): DataFrame = {
     val u = updates.select(col("guid").as("u_guid"), col("attributes"))
     docs.join(u, col("guid") === col("u_guid"), "left_outer")
@@ -452,16 +340,4 @@ object DocumentAlgebra {
   def deleteDocs(docs: DataFrame, deletes: DataFrame): DataFrame =
     docs.join(deletes.select(col("guid").as("del_guid")),
       col("guid") === col("del_guid"), "left_anti")
-
-  /** A8: last-wins merge of updated doc versions — one row per guid, the
-    * highest `seq` wins (the reference's dict-overwrite accumulate,
-    * synchronize_app_search.py:335,396,462,524,561). */
-  def lastWins(updates: DataFrame, seqCol: String = "seq"): DataFrame = {
-    val dataCols = updates.columns.filterNot(_ == seqCol)
-    updates.groupBy("guid").agg(
-      max_by(struct(dataCols.filterNot(_ == "guid").map(col): _*),
-        col(seqCol)).as("doc"))
-      .select(col("guid") +: dataCols.filterNot(_ == "guid")
-        .map(c => col(s"doc.$c").as(c)): _*)
-  }
 }

@@ -395,14 +395,19 @@ object Pipeline {
       .unionByName(toAttributeFieldLinks(direct, "deletedRelationships"))
     val roles = toGovernanceRoles(direct)
       .unionByName(toGovernanceRoles(direct, "deletedRelationships"))
-    messages.select("guid")
-      .unionByName(messages.filter(col("parentGuid").isNotNull)
-        .select(col("parentGuid").as("guid")))
+    messageGuids(messages)
       .unionByName(links.select(col("attrGuid").as("guid")))
       .unionByName(links.select(col("fieldGuid").as("guid")))
       .unionByName(roles.select("guid"))
       .distinct()
   }
+
+  /** Message entities and their new parents (breadcrumb derivation reads
+    * the parent doc), with repeats. */
+  private def messageGuids(messages: DataFrame): DataFrame =
+    messages.select("guid")
+      .unionByName(messages.filter(col("parentGuid").isNotNull)
+        .select(col("parentGuid").as("guid")))
 
   /** Load the bucket subset a batch can read or write: the touched guids,
     * their stored breadcrumb descendants (a cascade's reach), and their
@@ -448,10 +453,7 @@ object Pipeline {
   def applyPrunedMessages(store: graft.store.DocumentStore,
       messages: DataFrame): (DataFrame, Set[Int]) = {
     val touched = graft.Materialize.checkpoint(
-      messages.select("guid")
-        .unionByName(messages.filter(col("parentGuid").isNotNull)
-          .select(col("parentGuid").as("guid")))
-        .distinct())
+      messageGuids(messages).distinct())
     val (loaded, buckets) = loadTouchedBuckets(store, touched)
     (SynchronizeSearch.applyChanges(loaded, messages), buckets)
   }

@@ -40,8 +40,14 @@ object SynchronizeSearch {
   def directOnly(messages: DataFrame): DataFrame =
     messages.filter(col("directChange"))
 
-  def applyChanges(docs: DataFrame, messages: DataFrame,
-      maxCascadeDepth: Int = 10): DataFrame = {
+  /** Levels the breadcrumb cascade walks per batch; each level costs two
+    * counted checkpoints. The walk already ends when a level finds no
+    * children (a cyclic parent chain has no anchor, so it never enters the
+    * frontier); the cap bounds a batch's jobs on a tree deeper than the m4i
+    * hierarchy, whose deeper documents keep stale breadcrumbs (logged). */
+  private val maxCascadeDepth = 10
+
+  def applyChanges(docs: DataFrame, messages: DataFrame): DataFrame = {
     val m = messages.withColumn("seq", coalesce(col("seq"), lit(0L)))
 
     // ONE probe decides which phases run at all: phase 3 (parent edges)
@@ -115,7 +121,7 @@ object SynchronizeSearch {
           struct(col("seq"), col("parentGuid"))).as("e"))
         .select(col("guid"), col("e.parentGuid").as("parentGuid"),
           col("e.parentRemoved").as("parentRemoved")))
-      applyEdges(afterAttrs, edgeLatest, maxCascadeDepth)
+      applyEdges(afterAttrs, edgeLatest)
     }
 
     // --- phase 4: rename cascades (G17/G18). afterEdges is consumed three
@@ -150,8 +156,8 @@ object SynchronizeSearch {
     * mid's new path is final. The untouched store is merged back exactly
     * once; per-level materializations are O(|affected|), never
     * O(depth × |store|) (VERDICT r1 #3). */
-  private def applyEdges(afterAttrs0: DataFrame, edgeLatest: DataFrame,
-      maxCascadeDepth: Int): DataFrame = {
+  private def applyEdges(afterAttrs0: DataFrame, edgeLatest: DataFrame)
+      : DataFrame = {
     val newEdges = edgeLatest.filter(col("parentGuid").isNotNull)
       .select(col("guid").as("childGuid"), col("parentGuid"))
     val removedChildren = edgeLatest

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import scala.annotation.tailrec
 
 /** Type registry: supertype DAG closure, hierarchy mapping, source-type
-  * classification (SURVEY §2.5 G1–G7).
+  * classification (SURVEY §2.5 G1–G4; the lookups behind G5–G7).
   *
   * The reference resolves supertypes by recursive Atlas REST calls per record
   * (`/root/reference/m4i_flink_tasks/synchronize_app_search/synchronize_app_search.py:27-48`).
@@ -70,44 +70,9 @@ object TypeRegistry {
     "m4i_dataset" -> "m4i_collection",
     "m4i_field" -> "m4i_dataset")
 
-  /** G2: Business iff any business type is in the supertype closure. */
-  def sourceTypeOf(typeName: String): String =
-    if (superTypeClosure.getOrElse(typeName, Seq(typeName))
-        .exists(businessTypes.contains)) "Business" else "Technical"
-
-  /** G3: intersection of the closure with the 7 known m4i types. */
-  def m4iSourceTypesOf(typeName: String): Seq[String] =
-    superTypeClosure.getOrElse(typeName, Seq(typeName))
-      .filter(m4iTypes.contains)
-
-  /** G5: parent-child relationship iff the mapping links the two types
-    * (either orientation) or the relationship key is prefixed child/parent
-    * (`is_parent_child_relationship` synchronize_app_search.py:117-130). */
-  def isParentChild(relKey: String, typeA: String, typeB: String): Boolean =
-    relKey.startsWith("child") || relKey.startsWith("parent") ||
-      hierarchyMapping.get(typeA).contains(typeB) ||
-      hierarchyMapping.get(typeB).contains(typeA)
-
-  /** G6: orient (parentGuid, childGuid) from the hierarchy
-    * (`get_parent_child_entity_guid` synchronize_app_search.py:205-228). */
-  def orientParentChild(relKey: String, guidA: String, typeA: String,
-      guidB: String, typeB: String): Option[(String, String)] =
-    if (hierarchyMapping.get(typeA).contains(typeB)) Some((guidB, guidA))
-    else if (hierarchyMapping.get(typeB).contains(typeA)) Some((guidA, guidB))
-    else if (relKey.startsWith("parent")) Some((guidB, guidA))
-    else if (relKey.startsWith("child")) Some((guidA, guidB))
-    else None
-
-  /** G7: attribute↔field cross-link classifier
-    * (`is_attribute_field_relationship` synchronize_app_search.py:135-143). */
-  def isAttributeField(typeA: String, typeB: String): Boolean = {
-    val a = superTypeClosure.getOrElse(typeA, Seq(typeA)).toSet
-    val b = superTypeClosure.getOrElse(typeB, Seq(typeB)).toSet
-    (a.contains("m4i_field") && b.contains("m4i_data_attribute")) ||
-      (b.contains("m4i_field") && a.contains("m4i_data_attribute"))
-  }
-
-  // --- columnar forms (broadcast the closure as a literal map dimension) ---
+  // --- column lookups (the closure as a literal map dimension). The
+  // relationship classifiers G5-G7 apply them to both ends of an edge in
+  // `Pipeline.toParentEdges` and `Pipeline.toAttributeFieldLinks`. ---
 
   /** Closure as a column lookup: typeName → ARRAY<STRING> supertypes. */
   def superTypesCol(typeName: Column): Column = {
@@ -117,18 +82,20 @@ object TypeRegistry {
     coalesce(element_at(map(entries: _*), typeName), array(typeName))
   }
 
-  /** G2 columnar: Business/Technical via arrays_overlap on the closure. */
+  /** G2: Business iff any business type is in the supertype closure
+    * (arrays_overlap on the closure). */
   def sourceTypeCol(typeName: Column): Column =
     when(arrays_overlap(superTypesCol(typeName),
       array(businessTypes.toSeq.sorted.map(lit): _*)), "Business")
       .otherwise("Technical")
 
-  /** G3 columnar: array_intersect with the m4i types. */
+  /** G3: the closure intersected with the 7 known m4i types, in closure
+    * order. */
   def m4iSourceTypesCol(typeName: Column): Column =
     array_intersect(superTypesCol(typeName),
       array(m4iTypes.toSeq.sorted.map(lit): _*))
 
-  /** G4 columnar: child type → parent type lookup. */
+  /** G4: child type → parent type lookup. */
   def parentTypeCol(typeName: Column): Column = {
     val entries = hierarchyMapping.toSeq.flatMap { case (c, p) => Seq(lit(c), lit(p)) }
     element_at(map(entries: _*), typeName)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.model.AtlasModel._
 
 /** Structured-Streaming re-expression of the reference's four PyFlink jobs
-  * (SURVEY §2.1 S1–S3/S10–S12, §2.7, §3.1).
+  * (SURVEY §2.1 S1–S3/S10, §2.7, §3.1).
   *
   * Transforms are factored as Dataset→Dataset so tests drive them through
   * `MemoryStream` and production wires them to Kafka. The reference's
@@ -44,15 +44,6 @@ object StreamingJobs {
   /** S3: debug console sink (the reference's `.print()` on every job). */
   def consoleSink(ds: DataFrame) =
     ds.writeStream.format("console").option("truncate", "false")
-
-  /** P14/P15 (reference examples): scalar doubling map and tuple map
-    * (`batch_processing_example.py:19-24`,
-    * `stream_processing_example.py:24-27`) as column expressions. */
-  def doubledData(df: DataFrame): DataFrame =
-    df.select(col("id"), concat(col("data"), col("data")).as("data"))
-
-  def tupleMap(spark: SparkSession, n: Long = 100): DataFrame =
-    numberSequence(spark, n).select(col("id"), (col("id") + 2).as("plus2"))
 
   // ---- S10: dead-letter error channel. The reference constructs a Kafka
   //      producer inside each operator's except block
@@ -286,14 +277,20 @@ object StreamingJobs {
         // A crash between directory creation and a completed append can
         // leave versionsPath existing but without readable parquet parts;
         // reading it then fails schema inference PERMANENTLY on restart.
-        // Treat a partless directory exactly like an absent one. Hadoop FS
-        // API so remote stores (hdfs://, s3a://) behave like local disk.
+        // Treat a partless directory exactly like an absent one. Parts under
+        // a hidden directory (`_temporary/` of an uncommitted write) do not
+        // count: Spark's reader skips `_`/`.` names that are not partition
+        // directories (`k=v`). Hadoop FS API so remote stores (hdfs://,
+        // s3a://) behave like local disk.
         def hasParquetParts(fs: org.apache.hadoop.fs.FileSystem,
             p: org.apache.hadoop.fs.Path): Boolean =
-          fs.exists(p) && fs.listStatus(p).exists(s =>
-            (s.isFile && s.getPath.getName.startsWith("part-") &&
-              !s.getPath.getName.endsWith(".crc")) ||
-            (s.isDirectory && hasParquetParts(fs, s.getPath)))
+          fs.exists(p) && fs.listStatus(p).exists { s =>
+            val name = s.getPath.getName
+            (s.isFile && name.startsWith("part-") && !name.endsWith(".crc")) ||
+            (s.isDirectory && !name.startsWith(".") &&
+              !(name.startsWith("_") && !name.contains("=")) &&
+              hasParquetParts(fs, s.getPath))
+          }
         val vPath = new org.apache.hadoop.fs.Path(versionsPath)
         val vFs = vPath.getFileSystem(
           spark.sparkContext.hadoopConfiguration)
@@ -332,16 +329,4 @@ object StreamingJobs {
         graft.store.VersionedStore.append(versions, versionsPath)
         ()
       }
-
-  // ---- S11/S12: example sources (rate / in-memory elements,
-  //      examples/stream_processing_example.py:39-44,
-  //      batch_processing_example.py:17) ----
-
-  def numberSequence(spark: SparkSession, n: Long = 100): DataFrame =
-    spark.range(1, n + 1).toDF("id")
-
-  def fromElements(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq((1, "Hi"), (2, "Hello")).toDF("id", "data")
-  }
 }

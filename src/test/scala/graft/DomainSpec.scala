@@ -36,44 +36,84 @@ class RegistrySpec extends AnyFunSuite {
     assert(c == Seq("Referenceable", "m4i_referenceable", "m4i_data_domain"))
   }
 
+  // The registry's lookups as the chain applies them: one row per type
+  private def typeLookups(types: String*): Map[String, (String, Seq[String])] = {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    types.toDF("typeName")
+      .select(col("typeName"),
+        TypeRegistry.sourceTypeCol(col("typeName")),
+        TypeRegistry.m4iSourceTypesCol(col("typeName")))
+      .collect()
+      .map(r => r.getString(0) -> (r.getString(1), r.getSeq[String](2).toSeq))
+      .toMap
+  }
+
+  // Diffed change rows, one inserted relationship each:
+  // (guid, typeName, relationship key, referenced guid, referenced type)
+  private def relChanges(rels: (String, String, String, String, String)*) = {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    rels.map { case (g, t, key, refGuid, refType) =>
+        (g, t, 1L, true, Map(key -> Seq(RelRef(refGuid, refType)))) }
+      .toDF("guid", "typeName", "updateTime", "directChange",
+        "insertedRelationships")
+  }
+
   test("source-type classification: Business vs Technical (G2)") {
-    assert(TypeRegistry.sourceTypeOf("m4i_data_domain") == "Business")
-    assert(TypeRegistry.sourceTypeOf("m4i_field") == "Technical")
-    assert(TypeRegistry.sourceTypeOf("unknown_type") == "Technical")
+    val t = typeLookups("m4i_data_domain", "m4i_field", "unknown_type")
+    assert(t("m4i_data_domain")._1 == "Business")
+    assert(t("m4i_field")._1 == "Technical")
+    assert(t("unknown_type")._1 == "Technical")
   }
 
   test("m4i source types projection (G3)") {
-    assert(TypeRegistry.m4iSourceTypesOf("m4i_data_domain") ==
-      Seq("m4i_data_domain"))
-    assert(TypeRegistry.m4iSourceTypesOf("m4i_kafka_field") == Seq("m4i_field"))
+    val t = typeLookups("m4i_data_domain", "m4i_kafka_field", "unknown_type")
+    assert(t("m4i_data_domain")._2 == Seq("m4i_data_domain"))
+    assert(t("m4i_kafka_field")._2 == Seq("m4i_field"))
+    assert(t("unknown_type")._2.isEmpty)
   }
 
   test("parent-child classification + orientation (G5/G6)") {
-    assert(TypeRegistry.isParentChild("dataEntity", "m4i_data_entity",
-      "m4i_data_domain"))
-    assert(TypeRegistry.orientParentChild("x", "gE", "m4i_data_entity",
-      "gD", "m4i_data_domain").contains(("gD", "gE")))
-    assert(TypeRegistry.orientParentChild("parentCollection", "gA", "tA",
-      "gB", "tB").contains(("gB", "gA")))
+    val edges = graft.jobs.Pipeline.toParentEdges(relChanges(
+        // the hierarchy links the two types: it orients from either end
+        ("gE", "m4i_data_entity", "dataDomain", "gD", "m4i_data_domain"),
+        ("gD2", "m4i_data_domain", "x", "gE2", "m4i_data_entity"),
+        // a subtype matches through its m4i source types under a neutral
+        // key: m4i_kafka_field is an m4i_field, whose parent is a dataset
+        ("gK", "m4i_kafka_field", "x", "gS", "m4i_dataset"),
+        // types the hierarchy does not link: the key prefix decides
+        ("gA", "tA", "parentCollection", "gB", "tB"),
+        ("gC", "tC", "childEntities", "gF", "tF"),
+        // neither: no edge
+        ("gY", "m4i_system", "x", "gZ", "m4i_data_domain")))
+      .collect()
+      .map(r => r.getAs[String]("childGuid") -> r.getAs[String]("parentGuid"))
+    assert(edges.toSet == Set("gE" -> "gD", "gE2" -> "gD2", "gK" -> "gS",
+      "gA" -> "gB", "gF" -> "gC"))
+    assert(edges.length == 5)
   }
 
   test("attribute-field classifier (G7)") {
-    assert(TypeRegistry.isAttributeField("m4i_kafka_field",
-      "m4i_data_attribute"))
-    assert(!TypeRegistry.isAttributeField("m4i_system", "m4i_data_domain"))
+    val links = graft.jobs.Pipeline.toAttributeFieldLinks(relChanges(
+        ("gK", "m4i_kafka_field", "x", "gAt", "m4i_data_attribute"),
+        ("gAt2", "m4i_data_attribute", "fields", "gF", "m4i_field"),
+        ("gY", "m4i_system", "x", "gZ", "m4i_data_domain")))
+      .collect()
+      .map(r => r.getAs[String]("attrGuid") -> r.getAs[String]("fieldGuid"))
+    assert(links.toSet == Set("gAt" -> "gK", "gAt2" -> "gF"))
+    assert(links.length == 2)
   }
 
   test("columnar registry lookups agree with driver-side closure") {
     val spark = SparkTestSession.spark
     import spark.implicits._
-    val df = Seq("m4i_data_domain", "m4i_kafka_field", "weird").toDF("typeName")
+    val types = TypeRegistry.superTypeClosure.keys.toSeq :+ "weird"
+    val sups = types.toDF("typeName")
       .select(col("typeName"),
-        TypeRegistry.sourceTypeCol(col("typeName")).as("st"),
         TypeRegistry.superTypesCol(col("typeName")).as("sups"))
-    val rows = df.collect().map(r => (r.getString(0), r.getString(1))).toMap
-    assert(rows("m4i_data_domain") == "Business")
-    assert(rows("m4i_kafka_field") == "Technical")
-    assert(rows("weird") == "Technical")
+      .collect().map(r => r.getString(0) -> r.getSeq[String](1).toSeq).toMap
+    assert(sups == TypeRegistry.superTypeClosure + ("weird" -> Seq("weird")))
   }
 }
 
@@ -286,30 +326,25 @@ class DocumentAlgebraSpec extends AnyFunSuite {
     assert(docs4.count() == 1)
   }
 
-  test("breadcrumb prefix insert is idempotent; delete slices at guid (G9/G10)") {
-    import spark.implicits._
-    val df = Seq((Seq("a", "b", "c"), "b"), (Seq("b", "c"), "b"))
-      .toDF("bc", "g")
-      .select(
-        DocumentAlgebra.insertBreadcrumbPrefix(col("bc"), col("g")).as("ins"),
-        DocumentAlgebra.deleteBreadcrumbPrefix(col("bc"), col("g")).as("del"))
-      .collect()
-    assert(df(0).seq("ins") == Seq("a", "b", "c")) // already present
-    assert(df(0).seq("del") == Seq("b", "c")) // sliced above b
-    assert(df(1).seq("ins") == Seq("b", "c"))
-  }
-
   test("derived-field inherit and clear (G12–G14)") {
     import spark.implicits._
-    val df = Seq((Map("x" -> "1", "y" -> "2"), Map("y" -> "9", "z" -> "3")))
+    val inh = Seq((Map("x" -> "1", "y" -> "2"), Map("y" -> "9", "z" -> "3")))
       .toDF("child", "parent")
-      .select(
-        DocumentAlgebra.inheritDerived(col("child"), col("parent")).as("inh"),
-        DocumentAlgebra.clearDerived(col("child"), col("parent")).as("clr"))
-      .collect().head
-    assert(df.getAs[Map[String, String]]("inh") ==
-      Map("x" -> "1", "y" -> "9", "z" -> "3"))
-    assert(df.getAs[Map[String, String]]("clr") == Map("x" -> "1", "y" -> "2"))
+      .select(DocumentAlgebra.inheritDerived(col("child"), col("parent")))
+      .collect().head.getMap[String, String](0)
+    assert(inh == Map("x" -> "1", "y" -> "9", "z" -> "3"))
+    // G14: the clear is the delete side of the resolve functions — an
+    // unassigned role drops its key and leaves every other derived key
+    val docs = apply_(emptyDocs, msgRow("gD", "EntityCreated",
+        Map("qualifiedName" -> "dom", "name" -> "Dom")))
+      .withColumn("derivedGuids", map(lit("deriveddomainleadguid"),
+        lit("pLead"), lit("derivedfieldguid"), lit("gF")))
+    val unassigned = Seq(("gD", "domainLead", "pLead", 0L))
+      .toDF("guid", "role", "personGuid", "seq")
+    val cleared = DocumentAlgebra.resolveGovernanceRoles(docs,
+      unassigned.limit(0), unassigned).collect().head
+    assert(cleared.getAs[Map[String, String]]("derivedGuids") ==
+      Map("derivedfieldguid" -> "gF"))
   }
 
   test("attribute-field cross-links set and clear derived fields (G15)") {
@@ -321,8 +356,9 @@ class DocumentAlgebraSpec extends AnyFunSuite {
         Map("qualifiedName" -> "fld", "name" -> "Fld"),
         typeName = "m4i_field"))
     val docs = apply_(emptyDocs, batch)
-    val links = Seq(("gAt", "gF")).toDF("attrGuid", "fieldGuid")
-    val linked = DocumentAlgebra.applyAttributeFieldLinks(docs, links)
+    val links = Seq(("gAt", "gF", 0L)).toDF("attrGuid", "fieldGuid", "seq")
+    val linked = DocumentAlgebra
+      .resolveAttributeFieldLinks(docs, links, links.limit(0))
       .localCheckpoint(true)
     val att = linked.filter(col("guid") === "gAt").collect().head
     assert(att.getAs[Map[String, String]]("derivedNames") ==
@@ -334,7 +370,7 @@ class DocumentAlgebraSpec extends AnyFunSuite {
       Map("deriveddataattributeguid" -> "gAt"))
     // inverse delete clears both ends
     val cleared = DocumentAlgebra
-      .applyAttributeFieldLinks(linked, links, delete = true)
+      .resolveAttributeFieldLinks(linked, links.limit(0), links)
     assert(cleared.collect().forall(
       _.getAs[Map[String, String]]("derivedGuids").isEmpty))
   }
@@ -349,19 +385,23 @@ class DocumentAlgebraSpec extends AnyFunSuite {
       .unionByName(msgRow("gF2", "EntityCreated",
         Map("qualifiedName" -> "f2", "name" -> "F2"), typeName = "m4i_field"))
     val docs = apply_(emptyDocs, batch)
-    // ONE attribute linked to TWO fields in the same batch: deterministic
+    // ONE attribute linked to TWO fields at the same seq: deterministic
     // winner (max other_guid), no duplicate-map-key crash
-    val links = Seq(("gAt", "gF1"), ("gAt", "gF2")).toDF("attrGuid", "fieldGuid")
-    val linked = DocumentAlgebra.applyAttributeFieldLinks(docs, links)
+    val links = Seq(("gAt", "gF1", 0L), ("gAt", "gF2", 0L))
+      .toDF("attrGuid", "fieldGuid", "seq")
+    val linked = DocumentAlgebra
+      .resolveAttributeFieldLinks(docs, links, links.limit(0))
       .filter(col("guid") === "gAt").collect().head
     assert(linked.getAs[Map[String, String]]("derivedGuids") ==
       Map("derivedfieldguid" -> "gF2"))
     assert(linked.getAs[Map[String, String]]("derivedNames") ==
       Map("derivedfield" -> "F2"))
     // TWO persons in the same governance role: same rule
-    val roles = Seq(("gAt", "domainLead", "p1"), ("gAt", "domainLead", "p2"))
-      .toDF("guid", "role", "personGuid")
-    val roled = DocumentAlgebra.applyGovernanceRoles(docs, roles)
+    val roles = Seq(("gAt", "domainLead", "p1", 0L),
+        ("gAt", "domainLead", "p2", 0L))
+      .toDF("guid", "role", "personGuid", "seq")
+    val roled = DocumentAlgebra
+      .resolveGovernanceRoles(docs, roles, roles.limit(0))
       .filter(col("guid") === "gAt").collect().head
     assert(roled.getAs[Map[String, String]]("derivedGuids") ==
       Map("deriveddomainleadguid" -> "p2"))
@@ -371,11 +411,12 @@ class DocumentAlgebraSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = apply_(emptyDocs, msgRow("gD", "EntityCreated",
       Map("qualifiedName" -> "dom", "name" -> "Dom")))
-    val roles = Seq(("gD", "domainLead", "pLead"),
-      ("gD", "dataSteward", "pSteward"),
-      ("gD", "unknownRole", "pX"))
-      .toDF("guid", "role", "personGuid")
-    val out = DocumentAlgebra.applyGovernanceRoles(docs, roles)
+    val roles = Seq(("gD", "domainLead", "pLead", 0L),
+      ("gD", "dataSteward", "pSteward", 0L),
+      ("gD", "unknownRole", "pX", 0L))
+      .toDF("guid", "role", "personGuid", "seq")
+    val out = DocumentAlgebra
+      .resolveGovernanceRoles(docs, roles, roles.limit(0))
       .collect().head
     assert(out.getAs[Map[String, String]]("derivedGuids") ==
       Map("deriveddomainleadguid" -> "pLead",
@@ -393,7 +434,8 @@ class DocumentAlgebraSpec extends AnyFunSuite {
         map(lit("derivedfieldguid"), lit("gX"),
           lit("deriveddomainleadguid"), lit("gL")))
     val renames = Seq(("gX", "New")).toDF("guid", "newName")
-    val out = DocumentAlgebra.renameInDerived(docs, renames).collect().head
+    val out = DocumentAlgebra.renameInDerived(docs, renames, bulk = false)
+      .collect().head
     // exact key set preserved: the renamed name rewritten, role guids (which
     // have no name entry) must NOT seed null-valued derivedNames keys
     assert(out.getAs[Map[String, String]]("derivedNames") ==
@@ -402,7 +444,8 @@ class DocumentAlgebraSpec extends AnyFunSuite {
       Map("derivedfieldguid" -> "gX", "deriveddomainleadguid" -> "gL"))
     // a rename of an unreferenced guid leaves the maps untouched
     val out2 = DocumentAlgebra.renameInDerived(docs,
-      Seq(("gZ", "Zed")).toDF("guid", "newName")).collect().head
+      Seq(("gZ", "Zed")).toDF("guid", "newName"), bulk = false)
+      .collect().head
     assert(out2.getAs[Map[String, String]]("derivedNames") ==
       Map("derivedfield" -> "Old"))
   }
@@ -454,16 +497,16 @@ class DocumentAlgebraSpec extends AnyFunSuite {
       df.orderBy("guid").collect()
         .map(r => r.getAs[String]("guid") -> r.seq("breadcrumbName")).toSeq
     assert(
-      normBc(DocumentAlgebra.renameInBreadcrumbs(docs, renames,
-        broadcastLimit = 0)) ==
-      normBc(DocumentAlgebra.renameInBreadcrumbs(docs, renames)))
+      normBc(DocumentAlgebra.renameInBreadcrumbs(docs, renames, bulk = true)) ==
+      normBc(DocumentAlgebra.renameInBreadcrumbs(docs, renames, bulk = false)))
     def normDn(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("guid").collect()
         .map(r => r.getAs[String]("guid") ->
           r.getAs[Map[String, String]]("derivedNames")).toSeq
     val viaJoin = normDn(DocumentAlgebra.renameInDerived(docs, renames,
-      broadcastLimit = 0))
-    assert(viaJoin == normDn(DocumentAlgebra.renameInDerived(docs, renames)))
+      bulk = true))
+    assert(viaJoin ==
+      normDn(DocumentAlgebra.renameInDerived(docs, renames, bulk = false)))
     assert(viaJoin.toMap.apply("gE") == Map("derivedfield" -> "Dom2"))
   }
 
@@ -586,11 +629,25 @@ class DocumentAlgebraSpec extends AnyFunSuite {
   }
 
   test("last-wins merge keeps highest seq per guid (A8)") {
-    import spark.implicits._
-    val updates = Seq(("g1", 1L, "v1"), ("g1", 3L, "v3"), ("g2", 2L, "v2"))
-      .toDF("guid", "seq", "payload")
-    val merged = DocumentAlgebra.lastWins(updates).collect()
-      .map(r => r.getAs[String]("guid") -> r.getAs[String]("payload")).toMap
-    assert(merged == Map("g1" -> "v3", "g2" -> "v2"))
+    // the dispatcher's attribute fold: per (guid, key), the highest seq
+    // wins regardless of arrival order; keys a later event leaves alone
+    // keep their earlier value
+    val docs = apply_(emptyDocs, msgRow("g1", "EntityCreated",
+        Map("qualifiedName" -> "q1", "name" -> "N0"))
+      .unionByName(msgRow("g2", "EntityCreated",
+        Map("qualifiedName" -> "q2", "name" -> "M0"))))
+    val out = apply_(docs,
+      msgRow("g1", "EntityAttributeAudit",
+          Map("name" -> "N3"), seq = 3L)
+        .unionByName(msgRow("g1", "EntityAttributeAudit",
+          Map("name" -> "N1", "definition" -> "d1"), seq = 1L))
+        .unionByName(msgRow("g1", "EntityAttributeAudit",
+          Map("name" -> "N2"), seq = 2L))
+        .unionByName(msgRow("g2", "EntityAttributeAudit",
+          Map("name" -> "M2"), seq = 2L)))
+      .collect()
+      .map(r => r.getAs[String]("guid") ->
+        (r.getAs[String]("name"), r.getAs[String]("definition"))).toMap
+    assert(out == Map("g1" -> ("N3", "d1"), "g2" -> ("M2", null)))
   }
 }

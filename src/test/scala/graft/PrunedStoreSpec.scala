@@ -112,10 +112,11 @@ class PrunedStoreSpec extends AnyFunSuite {
       None: Option[String], false, true))
     val edge = (childG, null: String, null: String, "EntityRelationshipAudit",
       10L, Map.empty[String, String], Some(parentG), false, true)
-    val seeded = graft.docs.DocumentAlgebra.applyAttributeFieldLinks(
+    val link = Seq((attrG, fieldG, 1L)).toDF("attrGuid", "fieldGuid", "seq")
+    val seeded = graft.docs.DocumentAlgebra.resolveAttributeFieldLinks(
       graft.jobs.Pipeline.applyAll(emptyDocs, messages(creates :+ edge),
         emptyDirect),
-      Seq((attrG, fieldG)).toDF("attrGuid", "fieldGuid"))
+      link, link.limit(0))
     store.sync(Materialize.checkpoint(seeded))
     assert(store.currentVersion.contains(0L))
     assert(bucketDirs(dir, "v", 0).size == nB)

@@ -52,15 +52,6 @@ class SourcesSpec extends AnyFunSuite {
     assert(out("b") == Seq(2.0))
   }
 
-  test("example maps: doubled data + tuple map (P14/P15)") {
-    val d = graft.streaming.StreamingJobs.doubledData(
-      graft.streaming.StreamingJobs.fromElements(spark)).collect()
-    assert(d.map(_.getString(1)).toSeq == Seq("HiHi", "HelloHello"))
-    val t = graft.streaming.StreamingJobs.tupleMap(spark, 3).collect()
-    assert(t.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
-      Seq((1L, 3L), (2L, 4L), (3L, 5L)))
-  }
-
   test("prefix strip + json extraction + doc id (P11-P13)") {
     import spark.implicits._
     val df = Seq(("attributes.name", """log: {"a": 1} end""", "g1", 42L))

@@ -169,11 +169,20 @@ class StreamingChainSpec extends AnyFunSuite {
     val input = MemoryStream[String]
     def startQuery() = StreamingJobs.fullChain(input.toDF(),
       s"$dir/versions", store, emptyDocs, s"$dir/dlq", s"$dir/ckpt").start()
+    val create = rawEvent("gD", "ENTITY_CREATE", 100L, "m4i_data_domain",
+      Map("qualifiedName" -> "dom", "name" -> "Dom"))
+
+    // a first versions append that crashed before its job commit: the
+    // directory holds parts only under _temporary/, which Spark's reader
+    // skips — the chain must treat it as no history, not fail every batch
+    val task = s"$dir/versions/_temporary/0/task_0"
+    graft.store.VersionedStore.append(
+      graft.jobs.Pipeline.prepare(Seq(create).toDF("value"))._4, task)
+    new java.io.File(task, "_SUCCESS").delete()
 
     val q1 = startQuery()
     try {
-      input.addData(rawEvent("gD", "ENTITY_CREATE", 100L, "m4i_data_domain",
-        Map("qualifiedName" -> "dom", "name" -> "Dom")))
+      input.addData(create)
       q1.processAllAvailable()
       assert(store.read().get.count() == 1)
     } finally q1.stop()

@@ -543,12 +543,6 @@ class StreamingSpec extends AnyFunSuite {
       .get.select("h").collect().map(_.getString(0)).toSet
     assert(hashes.size == 3)
   }
-
-  test("number sequence + elements example sources (S11/S12)") {
-    assert(StreamingJobs.numberSequence(spark).count() == 100)
-    assert(StreamingJobs.fromElements(spark).collect()
-      .map(_.getString(1)).toSeq == Seq("Hi", "Hello"))
-  }
 }
 
 /** Multimodal spec: real javax.imageio decode on synthesized PNG/JPEG
